@@ -24,7 +24,9 @@ from pyspark.sql import functions as F
 def connected_components(vertices: DataFrame, edges: DataFrame,
                          max_iterations: int = 25) -> DataFrame:
     """vertices(id), edges(a, b) → (id, component) with component = min id
-    (lexicographic) of the member set. Deterministic and idempotent."""
+    (lexicographic) of the member set. Deterministic and idempotent.
+    Raises RuntimeError when `max_iterations` rounds end before a
+    fixpoint (the labels would not be canonical)."""
     # undirected: propagate both ways
     sym = (
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
@@ -51,8 +53,14 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
         n_changed = updated.filter(F.col("changed")).count()
         labels = updated.select("id", "component")
         if n_changed == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(_not_converged("connected_components", max_iterations))
+
+
+def _not_converged(fn: str, max_iterations: int) -> str:
+    return (f"{fn}: no fixpoint after max_iterations={max_iterations} "
+            f"rounds; the component labels would not be canonical — "
+            f"raise max_iterations")
 
 
 def connected_components_star(vertices: DataFrame, edges: DataFrame,
@@ -73,7 +81,8 @@ def connected_components_star(vertices: DataFrame, edges: DataFrame,
     `localCheckpoint`ed per round (lineage truncation). At fixpoint the
     edges form stars (child, root); isolated vertices map to themselves.
     Same contract as `connected_components`: (id, component), component =
-    min member id. Deterministic and idempotent.
+    min member id. Deterministic and idempotent. Raises RuntimeError when
+    `max_iterations` rounds end before a fixpoint.
     """
     cur = (edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
            .filter(F.col("u") != F.col("v")).distinct().localCheckpoint())
@@ -93,26 +102,19 @@ def connected_components_star(vertices: DataFrame, edges: DataFrame,
                    .union(j.select("u", F.col("m").alias("v"))))
         return out.filter(F.col("u") != F.col("v")).distinct()
 
-    converged = False
     for _ in range(max_iterations):
         nxt = phase(phase(cur, large=True), large=False).localCheckpoint()
         # fixpoint when the (canonically oriented) edge sets are equal;
         # counts + symmetric difference via exceptAll on the tiny star set
         if nxt.count() == cur.count() and nxt.exceptAll(cur).count() == 0:
-            cur = nxt
-            converged = True
             break
         cur = nxt
+    else:
+        raise RuntimeError(
+            _not_converged("connected_components_star", max_iterations))
 
     # stars: (u=child, v=root); attach isolated vertices as self-components
     roots = cur.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    if not converged:
-        # iteration cap hit before fixpoint: the edge set may not be a set
-        # of stars (multiple rows per child) — degrade to one-row-per-id by
-        # taking the min root, so the mapping never emits duplicate ids
-        # (labels may be non-canonical, but the contract shape holds, like
-        # the label-propagation path's cap behavior)
-        roots = roots.groupBy("id").agg(F.min("component").alias("component"))
     return (vertices.join(roots, "id", "left")
             .select("id", F.coalesce("component", "id").alias("component")))
 

@@ -18,6 +18,8 @@ sandbox writes parquet with identical layout.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,8 +31,18 @@ def with_subject_bucket(df: DataFrame, col: str, n_buckets: int) -> DataFrame:
 
 def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str,
                 n_buckets: int = 32, salt: int = 8,
-                fmt: str = "parquet") -> None:
-    """Writes {out_dir}/nodes, {out_dir}/edges, {out_dir}/metrics."""
+                fmt: str = "parquet") -> tuple[int, int]:
+    """Writes {out_dir}/nodes, {out_dir}/edges, {out_dir}/metrics and
+    returns the (nodes, edges) totals recorded in the metrics table.
+
+    The inputs are usually lazy plans (the canonical rewrite). Each is
+    materialized ONCE: both are `localCheckpoint`ed on entry, concurrently,
+    and the two table writes and the metrics all read that one copy — so
+    callers get the graph's size without counting the frames again."""
+    with ThreadPoolExecutor(2) as pool:
+        f_nodes = pool.submit(nodes.localCheckpoint)
+        f_edges = pool.submit(edges.localCheckpoint)
+        nodes, edges = f_nodes.result(), f_edges.result()
     nodes_b = with_subject_bucket(nodes, "id", n_buckets)
     edges_b = with_subject_bucket(edges, "subj", n_buckets)
 
@@ -47,8 +59,14 @@ def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str,
      .write.mode("overwrite").partitionBy("subj_bucket")
      .format(fmt).save(f"{out_dir}/nodes"))
 
+    # the metrics table is a few dozen rows: collect it once, write those
+    # rows and read the totals off them
     metrics = graph_metrics(nodes, edges)
-    metrics.coalesce(1).write.mode("overwrite").format(fmt).save(f"{out_dir}/metrics")
+    rows = metrics.collect()
+    (nodes.sparkSession.createDataFrame(rows, metrics.schema).coalesce(1)
+     .write.mode("overwrite").format(fmt).save(f"{out_dir}/metrics"))
+    totals = {r["key"]: r["n"] for r in rows if r["kind"] == "total"}
+    return totals["nodes"], totals["edges"]
 
 
 def graph_metrics(nodes: DataFrame, edges: DataFrame) -> DataFrame:

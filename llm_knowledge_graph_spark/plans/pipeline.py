@@ -26,7 +26,7 @@ from ..operators import materialize
 
 @dataclass
 class KGResult:
-    chunks: DataFrame
+    chunks: Optional[DataFrame]  # standalone chunker surface; build_kg only
     nodes: DataFrame          # merged, pre-canonicalization
     edges: DataFrame
     sim_edges: DataFrame      # entity-linking similarity edges
@@ -36,28 +36,38 @@ class KGResult:
     # typed K4 vector table (url, chunk_id, embedding array<float>) — lazy;
     # the serving path for cosine queries (operators/embed.py)
     chunk_embeddings: Optional[DataFrame] = None
-    # V4 gate outcome set by build_and_write: True = graph committed,
+    # V4 gate outcome set by write_kg: True = graph committed,
     # False = below confidence threshold (metrics only), None = ungated
     committed: Optional[bool] = None
+    # canonical graph size as recorded in {out}/metrics; set by write_kg
+    # when the graph commits (None before / without a write)
+    node_total: Optional[int] = None
+    edge_total: Optional[int] = None
+
+
+def with_detected_schema(pages: DataFrame,
+                         cfg: PipelineConfig) -> PipelineConfig:
+    """E1+E3 two-pass flow (ref code/pdf_graphrag.py:800-833): coarse-chunk
+    schema detection + refinement first, then the detected schema is
+    enforced strict-mode by the fine-chunk extraction. Explicit allowed
+    lists win over detection (the reference's fixed-schema path)."""
+    if (not cfg.auto_schema or cfg.allowed_entities is not None
+            or cfg.allowed_relationships is not None):
+        return cfg
+    from dataclasses import replace
+
+    from ..operators import schema_detect
+    detected = schema_detect.detect_schema(
+        pages, cfg.schema_chunk_size, cfg.schema_chunk_overlap)
+    return replace(cfg, allowed_entities=detected["nodes"],
+                   allowed_relationships=detected["relationships"])
 
 
 def build_kg(spark: SparkSession, pages: DataFrame,
              cfg: PipelineConfig = PipelineConfig(),
              alias_dict: Optional[DataFrame] = None) -> KGResult:
     pages = html_text.filter_langs(pages, cfg.supported_langs)
-
-    # E1+E3 two-pass flow (ref code/pdf_graphrag.py:800-833): coarse-chunk
-    # schema detection + refinement first, then the detected schema is
-    # enforced strict-mode by the fine-chunk extraction below. Explicit
-    # allowed lists win over detection (the reference's fixed-schema path).
-    if (cfg.auto_schema and cfg.allowed_entities is None
-            and cfg.allowed_relationships is None):
-        from ..operators import schema_detect
-        detected = schema_detect.detect_schema(
-            pages, cfg.schema_chunk_size, cfg.schema_chunk_overlap)
-        from dataclasses import replace
-        cfg = replace(cfg, allowed_entities=detected["nodes"],
-                      allowed_relationships=detected["relationships"])
+    cfg = with_detected_schema(pages, cfg)
 
     # FUSED per-document path: html→text + chunk + extract + graphdoc in one
     # mapInPandas stage (one Python crossing for the whole corpus — see
@@ -66,7 +76,18 @@ def build_kg(spark: SparkSession, pages: DataFrame,
     flat = extract.extract_pages_flat(
         pages, cfg.chunk_size, cfg.chunk_overlap,
         with_embedding=cfg.with_chunk_embeddings).persist()
+    res = kg_from_flat(flat, cfg, alias_dict)
+    res.chunks = chunker.chunk_pages(html_text.with_extracted_text(pages),
+                                     cfg.chunk_size, cfg.chunk_overlap)
+    return res
 
+
+def kg_from_flat(flat: DataFrame, cfg: PipelineConfig,
+                 alias_dict: Optional[DataFrame] = None) -> KGResult:
+    """Everything after extraction: strict filter → merge → link → CC →
+    canonical rewrite, over the fused extractor's flat rows. `flat` is
+    either build_kg's persisted extraction or the resumable CLI's
+    checkpointed one; both paths share this one definition."""
     nodes_raw = extract.nodes_from_flat(flat)
     edges_raw = extract.edges_from_flat(flat)
     if cfg.allowed_entities is not None or cfg.allowed_relationships is not None:
@@ -86,10 +107,10 @@ def build_kg(spark: SparkSession, pages: DataFrame,
     # localCheckpoint (eager) ONLY the merged (shuffled) slices — they are
     # consumed by 3+ downstream stages and truncating the plan keeps
     # Catalyst analysis flat. The pass-through slices (chunk nodes, HAS
-    # edges — the corpus-text-carrying bulk) stay LAZY projections of the
-    # persisted `flat` cache: no second in-memory copy, columnar cache
-    # pruning serves each consumer. The two checkpoints are independent →
-    # materialize them CONCURRENTLY.
+    # edges — the corpus-text-carrying bulk) stay LAZY projections of
+    # `flat`: no second in-memory copy, columnar cache pruning serves each
+    # consumer. The two checkpoints are independent → materialize them
+    # CONCURRENTLY.
     from concurrent.futures import ThreadPoolExecutor
     # Chunk-HAS = derived chunk→entity edges; an extractor MAY legitimately
     # emit an entity-entity relationship normalizing to "HAS" (e.g. "has"
@@ -107,41 +128,38 @@ def build_kg(spark: SparkSession, pages: DataFrame,
         chunk_nodes.select(*entity_merged.columns))
     edges = rel_merged.unionByName(
         has_edges.select(*rel_merged.columns))
-    chunks = chunker.chunk_pages(html_text.with_extracted_text(pages),
-                                 cfg.chunk_size, cfg.chunk_overlap)
 
     # entity linking + canonicalization (north rule; beyond the reference's
     # exact-(label,id) MERGE — ref code/pdf_graphrag.py:277-300).
     # Uses the checkpointed entity slice directly (not the union) so the
-    # linking plan never rescans the flat cache.
-    entity_nodes = entity_merged
+    # linking plan never rescans `flat`.
     sim = linking.similarity_edges(
-        entity_nodes, cfg.minhash_permutations, cfg.lsh_bands,
+        entity_merged, cfg.minhash_permutations, cfg.lsh_bands,
         cfg.shingle_size, cfg.jaccard_threshold, cfg.link_types,
     )
     if alias_dict is not None:
         sim = sim.unionByName(
-            linking.alias_dictionary_links(entity_nodes, alias_dict))
+            linking.alias_dictionary_links(entity_merged, alias_dict))
     # lazy: materializes at the mapping probe (first consumer) — one job
     # submission instead of an eager-checkpoint job + a probe job
     sim = sim.localCheckpoint(eager=False)
     # mapping is small (linked distinct names) and usually driver-built —
     # no checkpoint needed; rewrite broadcasts it
     mapping = components.canonical_mapping(
-        entity_nodes.select("id", "type"), sim, cfg.max_cc_iterations)
+        entity_merged.select("id", "type"), sim, cfg.max_cc_iterations)
 
     canonical_nodes, canonical_edges = rewrite_canonical(nodes, edges, mapping)
     from ..operators import embed
-    # chunk text for the embedding table comes from the PERSISTED flat
-    # cache (kind='n' chunk rows carry it on a dedicated column) — NOT from
-    # the standalone chunker, which would pay a second full html→text+chunk
-    # Python crossing of the corpus; `chunks` (with char spans) stays the
-    # lazy standalone surface for consumers that need spans
+    # chunk text for the embedding table comes from `flat` (kind='n' chunk
+    # rows carry it on a dedicated column) — NOT from the standalone
+    # chunker, which would pay a second full html→text+chunk Python
+    # crossing of the corpus; `chunks` (with char spans) stays the lazy
+    # standalone surface for consumers that need spans
     chunk_texts = (flat.filter((F.col("kind") == "n")
                                & F.col("chunk_text").isNotNull())
                    .select("url", "chunk_id",
                            F.col("chunk_text").alias("text")))
-    return KGResult(chunks, nodes, edges, sim, mapping,
+    return KGResult(None, nodes, edges, sim, mapping,
                     canonical_nodes, canonical_edges,
                     chunk_embeddings=embed.chunk_embeddings(chunk_texts))
 
@@ -272,13 +290,19 @@ def rewrite_canonical(nodes: DataFrame, edges: DataFrame,
 def build_and_write(spark: SparkSession, pages: DataFrame, out_dir: str,
                     cfg: PipelineConfig = PipelineConfig(),
                     alias_dict: Optional[DataFrame] = None) -> KGResult:
-    """Build + V4-gated materialize (gate ref legal_graphrag.py:619-626):
-    when cfg.confidence_threshold is set, the graph commits ONLY if
+    """build_kg + write_kg."""
+    return write_kg(build_kg(spark, pages, cfg, alias_dict), out_dir, cfg)
+
+
+def write_kg(res: KGResult, out_dir: str,
+             cfg: PipelineConfig = PipelineConfig()) -> KGResult:
+    """V4-gated materialize (gate ref legal_graphrag.py:619-626): when
+    cfg.confidence_threshold is set, the graph commits ONLY if
     mean(V1..V3) ≥ threshold; below it, only the metrics table is written
     ("recommend human review") and `res.committed` is False. Ungated runs
-    (threshold None) always commit, with the embeddings table alongside."""
+    (threshold None) always commit, with the embeddings table alongside;
+    a committed graph's totals land on `res.node_total`/`res.edge_total`."""
     from ..operators import embed, validate
-    res = build_kg(spark, pages, cfg, alias_dict)
 
     if cfg.confidence_threshold is not None:
         scores = validate.validation_scores(res.canonical_nodes)
@@ -291,8 +315,9 @@ def build_and_write(spark: SparkSession, pages: DataFrame, out_dir: str,
             return res
         res.committed = True
 
-    materialize.write_graph(res.canonical_nodes, res.canonical_edges, out_dir,
-                            cfg.n_subject_buckets, cfg.hot_subject_salt)
+    res.node_total, res.edge_total = materialize.write_graph(
+        res.canonical_nodes, res.canonical_edges, out_dir,
+        cfg.n_subject_buckets, cfg.hot_subject_salt)
     embed.write_embeddings(res.chunk_embeddings, out_dir,
                            cfg.n_subject_buckets)
     return res

@@ -1,7 +1,3 @@
-
-import pytest
-
-pytestmark = pytest.mark.heavy  # round-5 core/heavy split
 """North-rule: resumable per-partition checkpoints.
 
 Kill-and-resume: a run interrupted after some buckets must, on resume,
@@ -9,8 +5,12 @@ produce output identical to an uninterrupted run, recomputing only the
 missing buckets."""
 
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
+
+pytestmark = pytest.mark.heavy  # round-5 core/heavy split
 
 
 def _chunk_stage(df):
@@ -80,9 +80,11 @@ def test_materialize_roundtrip_and_bucket_pruning(spark, kg_result, tmp_path):
         read_graph, write_graph)
 
     out = str(tmp_path / "graph")
-    write_graph(kg_result.canonical_nodes, kg_result.canonical_edges, out,
-                n_buckets=8, salt=2)
+    totals = write_graph(kg_result.canonical_nodes, kg_result.canonical_edges,
+                         out, n_buckets=8, salt=2)
     nodes, edges = read_graph(spark, out)
+    assert totals == _metrics_totals(spark, out)
+    assert totals == (nodes.count(), edges.count())
     assert nodes.count() == kg_result.canonical_nodes.count()
     assert edges.count() == kg_result.canonical_edges.count()
     # subject-hash partition layout exists on disk → partition pruning works
@@ -93,6 +95,47 @@ def test_materialize_roundtrip_and_bucket_pruning(spark, kg_result, tmp_path):
     some_subj = edges.select("subj").first().subj
     pruned = edges.filter(F.col("subj") == some_subj)
     assert pruned.count() >= 1
+
+
+def _metrics_totals(spark, out):
+    """(nodes, edges) from the `total` rows of {out}/metrics."""
+    rows = spark.read.parquet(f"{out}/metrics").filter(
+        F.col("kind") == "total").collect()
+    totals = {r["key"]: r["n"] for r in rows}
+    return totals["nodes"], totals["edges"]
+
+
+def test_write_graph_computes_each_row_once(spark, tmp_path):
+    """write_graph materializes its inputs once: the edges write, the
+    nodes write and the metrics all read one copy, so a Python UDF in the
+    input plans runs once per row — not once per consumer."""
+    from llm_knowledge_graph_spark.operators.materialize import write_graph
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(x):
+        calls.add(1)
+        return x
+
+    # the counted column feeds every consumer: the table writes and the
+    # metrics' per-type / per-pred aggregates
+    n_nodes, n_edges = 40, 60
+    nodes = (spark.range(n_nodes)
+             .select(counted(F.concat(F.lit("n"), F.col("id").cast("string")))
+                     .alias("id"))
+             .withColumn("type", F.concat(F.lit("T"), F.length("id"))))
+    edges = (spark.range(n_edges)
+             .select(counted(F.concat(F.lit("n"), (F.col("id") % n_nodes)
+                                      .cast("string"))).alias("subj"),
+                     F.concat(F.lit("n"), ((F.col("id") + 1) % n_nodes)
+                              .cast("string")).alias("obj"))
+             .withColumn("pred", F.concat(F.lit("P"), F.length("subj"))))
+    out = str(tmp_path / "graph_once")
+    assert write_graph(nodes, edges, out, n_buckets=4, salt=2) == (
+        n_nodes, n_edges)
+    assert calls.value == n_nodes + n_edges
+    assert _metrics_totals(spark, out) == (n_nodes, n_edges)
 
 
 def test_cli_resumable_path_matches_build_kg(spark, pages_df, tmp_path):
@@ -118,6 +161,10 @@ def test_cli_resumable_path_matches_build_kg(spark, pages_df, tmp_path):
          "--buckets", "8", "--master", "local[4]"],
         capture_output=True, text=True, timeout=900)
     assert proc.returncode == 0, proc.stderr[-2000:]
+    # the reported size is the metrics table's, not a recount
+    printed = re.search(r"(\d+) nodes, (\d+) edges", proc.stdout)
+    assert printed, proc.stdout[-2000:]
+    assert tuple(map(int, printed.groups())) == _metrics_totals(spark, out)
 
     nodes, edges = materialize.read_graph(spark, out)
     got_nodes = {(r["type"], r["id"])

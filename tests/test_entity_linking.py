@@ -107,6 +107,22 @@ def test_star_contraction_matches_label_propagation(spark):
 
 
 @pytest.mark.heavy
+def test_connected_components_cap_raises(spark):
+    """An iteration cap that ends before the fixpoint is an error, not a
+    silently non-canonical labelling — on both CC algorithms."""
+    from llm_knowledge_graph_spark.operators.components import (
+        connected_components, connected_components_star)
+
+    ids = [f"n{i:03d}" for i in range(100)]
+    chain_v = spark.createDataFrame([(i,) for i in ids], "id string")
+    chain_e = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "a string, b string")
+    for cc in (connected_components, connected_components_star):
+        with pytest.raises(RuntimeError, match="max_iterations=1 "):
+            cc(chain_v, chain_e, max_iterations=1)
+
+
+@pytest.mark.heavy
 def test_canonical_mapping_driver_vs_distributed(spark):
     """The driver union-find fast path and the distributed checkpointed
     min-label propagation produce the SAME mapping (driver_threshold=0

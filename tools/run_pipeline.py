@@ -47,7 +47,8 @@ def main() -> None:
     args = ap.parse_args()
 
     from llm_knowledge_graph_spark.config import PipelineConfig
-    from llm_knowledge_graph_spark.operators import checkpoint, extract, materialize
+    from llm_knowledge_graph_spark.operators import checkpoint, extract
+    from llm_knowledge_graph_spark.operators import html_text
     from llm_knowledge_graph_spark.plans import pipeline
     from llm_knowledge_graph_spark.session import get_spark
     from llm_knowledge_graph_spark.sources.pages import (read_pages,
@@ -68,91 +69,35 @@ def main() -> None:
     if args.checkpoint_dir:
         # resumable path: the fused extract stage commits per-bucket
         # checkpoints; an interrupted run restarts from the manifest.
-        # Feature parity with build_and_write: auto-schema detection runs
-        # BEFORE extraction, strict-mode filtering applies to the resumed
-        # flat output, the V4 gate runs before the sink commit, and the
-        # embeddings table is derived from the checkpointed chunk text
-        # (no second extraction crossing).
-        from pyspark.sql import functions as F
-        pages = pages.filter(F.col("lang").isin(list(cfg.supported_langs)))
-        if (cfg.auto_schema and cfg.allowed_entities is None
-                and cfg.allowed_relationships is None):
-            from dataclasses import replace
-
-            from llm_knowledge_graph_spark.operators import schema_detect
-            detected = schema_detect.detect_schema(
-                pages, cfg.schema_chunk_size, cfg.schema_chunk_overlap)
-            cfg = replace(cfg, allowed_entities=detected["nodes"],
-                          allowed_relationships=detected["relationships"])
+        # Everything else is build_and_write's own code: auto-schema
+        # detection before extraction, the post-extract pipeline over the
+        # checkpointed rows, the V4 gate and the sink commit (embeddings
+        # derived from the checkpointed chunk text — no second extraction
+        # crossing).
+        pages = html_text.filter_langs(pages, cfg.supported_langs)
+        cfg = pipeline.with_detected_schema(pages, cfg)
         flat = checkpoint.run_stage_resumable(
             spark, pages,
             lambda df: extract.extract_pages_flat(
                 df, cfg.chunk_size, cfg.chunk_overlap),
             args.checkpoint_dir, args.run_id, "extract",
             key_col="url", n_buckets=max(8, args.buckets))
-        # same routing as build_kg: chunk nodes bypass the merge, HAS
-        # edges are DERIVED from node rows (round-1 omission: this path
-        # produced a graph without HAS edges), entity-entity HAS flows
-        # the relationship path
-        nodes_raw = extract.nodes_from_flat(flat)
-        edges_raw = extract.edges_from_flat(flat)
-        if (cfg.allowed_entities is not None
-                or cfg.allowed_relationships is not None):
-            nodes_raw, edges_raw = pipeline.strict_filter(
-                nodes_raw, edges_raw,
-                cfg.allowed_entities, cfg.allowed_relationships)
-        chunk_has = (F.col("pred") == "HAS") & (F.col("subj_type") == "Chunk")
-        from llm_knowledge_graph_spark.operators import (components, embed,
-                                                         linking, merge,
-                                                         validate)
-        chunk_nodes = nodes_raw.filter(F.col("type") == "Chunk")
-        has_edges = extract.has_edges_from_nodes(nodes_raw)
-        entity_merged = merge.merge_nodes(
-            nodes_raw.filter(F.col("type") != "Chunk")).localCheckpoint()
-        rel_merged = merge.merge_edges(
-            edges_raw.filter(~chunk_has)).localCheckpoint()
-        nodes = entity_merged.unionByName(
-            chunk_nodes.select(*entity_merged.columns))
-        edges = rel_merged.unionByName(
-            has_edges.select(*rel_merged.columns))
-        sim = linking.similarity_edges(
-            entity_merged, cfg.minhash_permutations, cfg.lsh_bands,
-            cfg.shingle_size, cfg.jaccard_threshold, cfg.link_types)
-        mapping = components.canonical_mapping(
-            entity_merged.select("id", "type"), sim, cfg.max_cc_iterations)
-        cn, ce = pipeline.rewrite_canonical(nodes, edges, mapping)
-        if cfg.confidence_threshold is not None:
-            scores = validate.validation_scores(cn)
-            if scores["confidence"] < cfg.confidence_threshold:
-                (materialize.graph_metrics(cn, ce).coalesce(1)
-                 .write.mode("overwrite").parquet(f"{args.out}/metrics"))
-                print(f"confidence {scores['confidence']:.4f} below "
-                      f"{cfg.confidence_threshold}: graph NOT committed "
-                      f"(metrics written to {args.out}/metrics)")
-                spark.stop()
-                return
-        materialize.write_graph(cn, ce, args.out, cfg.n_subject_buckets,
-                                cfg.hot_subject_salt)
-        chunk_texts = (flat.filter((F.col("kind") == "n")
-                                   & F.col("chunk_text").isNotNull())
-                       .select("url", "chunk_id",
-                               F.col("chunk_text").alias("text")))
-        embed.write_embeddings(embed.chunk_embeddings(chunk_texts),
-                               args.out, cfg.n_subject_buckets)
+        res = pipeline.write_kg(pipeline.kg_from_flat(flat, cfg),
+                                args.out, cfg)
     else:
         res = pipeline.build_and_write(spark, pages, args.out, cfg)
-        cn, ce = res.canonical_nodes, res.canonical_edges
-        if res.committed is False:
-            print(f"confidence below {args.confidence_threshold}: graph NOT "
-                  f"committed (metrics written to {args.out}/metrics)")
-            spark.stop()
-            return
 
+    if res.committed is False:
+        print(f"confidence below {args.confidence_threshold}: graph NOT "
+              f"committed (metrics written to {args.out}/metrics)")
+        spark.stop()
+        return
     if args.golden_json:
         from llm_knowledge_graph_spark.sources import golden_json
-        golden_json.write_graph_docs_json(cn, ce, args.golden_json)
-    nodes_n, edges_n = cn.count(), ce.count()
-    print(f"graph written to {args.out}: {nodes_n} nodes, {edges_n} edges")
+        golden_json.write_graph_docs_json(
+            res.canonical_nodes, res.canonical_edges, args.golden_json)
+    print(f"graph written to {args.out}: {res.node_total} nodes, "
+          f"{res.edge_total} edges")
     spark.stop()
 
 
