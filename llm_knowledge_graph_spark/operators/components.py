@@ -17,6 +17,7 @@ empirically) — it is the default distributed path in `canonical_mapping`.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -159,6 +160,14 @@ def canonical_mapping(nodes: DataFrame, sim_edges: DataFrame,
     star contraction, O(log n) rounds independent of diameter;
     `algorithm="label"` = checkpointed min-label propagation, O(diameter)
     rounds (fine for alias clusters, which have diameter ≤ 2-3).
+
+    The driver path's rows (including the empty mapping when nothing
+    links) enter the plan as an Arrow local relation
+    (`createDataFrame(pyarrow.Table, schema)` → `LocalTableScan`), so the
+    stages that read the mapping — every AQE stage of the rewrite's
+    broadcast — never start a Python worker. A list would be a pickled
+    `PythonRDD`; a pandas frame takes the Arrow path only when
+    `len(data) > 0` and falls back to one when empty, hence `pa.Table`.
     """
     sep = "\x1f"  # unit separator — never appears in normalized ids/types
     spark = sim_edges.sparkSession
@@ -171,16 +180,14 @@ def canonical_mapping(nodes: DataFrame, sim_edges: DataFrame,
     # that IS the complete edge set and the driver path runs (no separate
     # count() job). Only genuinely huge graphs pay the distributed loop.
     probe = edg.limit(driver_threshold + 1).collect()
-    if len(probe) == 0:
-        return spark.createDataFrame(
-            [], "type string, id string, canonical_id string")
     if len(probe) <= driver_threshold:
-        pairs = [(r.a, r.b) for r in probe]
-        mapping = driver_union_find(pairs)
-        rows = [(k.split(sep, 1)[0], k.split(sep, 1)[1],
-                 v.split(sep, 1)[1]) for k, v in mapping.items()]
+        mapping = driver_union_find([(r.a, r.b) for r in probe])
+        keys = [k.split(sep, 1) for k in mapping]
+        table = pa.table(
+            {"type": [t for t, _ in keys], "id": [i for _, i in keys],
+             "canonical_id": [v.split(sep, 1)[1] for v in mapping.values()]})
         return spark.createDataFrame(
-            rows, "type string, id string, canonical_id string")
+            table, "type string, id string, canonical_id string")
 
     verts = (edg.select(F.col("a").alias("id"))
              .union(edg.select(F.col("b").alias("id"))).distinct())

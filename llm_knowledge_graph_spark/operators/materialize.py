@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,7 +39,13 @@ def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str,
     The inputs are usually lazy plans (the canonical rewrite). Each is
     materialized ONCE: both are `localCheckpoint`ed on entry, concurrently,
     and the two table writes and the metrics all read that one copy — so
-    callers get the graph's size without counting the frames again."""
+    callers get the graph's size without counting the frames again.
+
+    The collected metrics rows go back in as an Arrow local relation
+    (`createDataFrame(pyarrow.Table, schema)` → `LocalTableScan`), so the
+    metrics write starts no Python worker: a list would be a pickled
+    `PythonRDD`, and a pandas frame takes the Arrow path only when
+    `len(data) > 0`."""
     with ThreadPoolExecutor(2) as pool:
         f_nodes = pool.submit(nodes.localCheckpoint)
         f_edges = pool.submit(edges.localCheckpoint)
@@ -63,7 +70,8 @@ def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str,
     # rows and read the totals off them
     metrics = graph_metrics(nodes, edges)
     rows = metrics.collect()
-    (nodes.sparkSession.createDataFrame(rows, metrics.schema).coalesce(1)
+    table = pa.table({c: [r[c] for r in rows] for c in metrics.columns})
+    (nodes.sparkSession.createDataFrame(table, metrics.schema).coalesce(1)
      .write.mode("overwrite").format(fmt).save(f"{out_dir}/metrics"))
     totals = {r["key"]: r["n"] for r in rows if r["kind"] == "total"}
     return totals["nodes"], totals["edges"]

@@ -331,7 +331,10 @@ def knn_join(embeddings: DataFrame, queries: DataFrame, k: int = 3,
              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """For each query row: its k nearest corpus neighbors (excluding itself).
     Window top-k over the scored join — the per-query sort is partitioned,
-    no global orderBy."""
+    no global orderBy. Brute force: it crossJoins queries × corpus, so
+    bound the input (a handful of queries over a bounded corpus); the IVF
+    index (`ivf_ann_topk`, `query_ivf_index`) and the hyperplane-LSH
+    bucket join (`lsh_ann_topk`) are the scale paths."""
     from pyspark.sql import Window
     c = embeddings.select(F.col(id_col).alias("nbr"), F.col(vec_col).alias("vc"))
     q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("vq"))

@@ -396,13 +396,14 @@ def kg_ann_ivf_topk(spark, sf_dir):
     fixed n_centroids=16 over a handful of vectors puts ~one vector per
     cell, so a 4-cell probe legitimately misses most planted neighbors
     and the gate raised on a healthy operator. Standard IVF practice
-    ties nlist to N; here n_centroids = min(16, max(1, N // 4)) — the
-    driver testdata (N >= 64) keeps the original 16/4, so recorded
+    ties nlist to N; here n_centroids = min(16, max(1, N // 4)), with N
+    the corpus the index is built over (the query row split off) — the
+    driver testdata (N >= 499) keeps the original 16/4, so recorded
     output is unchanged."""
     from ..operators.similarity import ivf_ann_topk
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qvec, corpus = _ann_query_split(e)
-    n_centroids = min(16, max(1, e.count() // 4))
+    n_centroids = min(16, max(1, corpus.count() // 4))
     n_probe = min(4, n_centroids)
     _assert_planted_ann_recall(
         spark, corpus, qvec,
@@ -413,6 +414,15 @@ def kg_ann_ivf_topk(spark, sf_dir):
                         n_probe=n_probe)
 
 
+def _is_directory(spark, path: str) -> bool:
+    """Whether `path` is a directory on the Hadoop FileSystem its URI
+    names (the local FS for a bare path), read through the session's JVM."""
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
+    return fs.getFileStatus(jpath).isDirectory()
+
+
 def _stream_documents(spark, sf_dir):
     """File-source stream over the documents table, robust to BOTH
     parquet layouts (round 5 — found by the KG edge-corpus smoke): the
@@ -421,13 +431,13 @@ def _stream_documents(spark, sf_dir):
     must stream the parent dir with a pathGlobFilter), while any
     Spark-written corpus is a DIRECTORY of part files (where the same
     glob matches nothing and the stream silently drains zero rows —
-    the in-query batch-parity gates caught exactly that). Local-FS
-    isdir probe is fine here; at scale tables are always directories
-    and the first branch is dead."""
-    import os
+    the in-query batch-parity gates caught exactly that). The layout is
+    probed through the Hadoop FileSystem of the session, so a URI
+    (`file://`, `hdfs://`, `s3a://`) resolves the same way the reader
+    resolves it."""
     path = f"{sf_dir}/documents.parquet"
     schema = spark.read.parquet(path).schema
-    if os.path.isdir(path):
+    if _is_directory(spark, path):
         return (spark.readStream.schema(schema)
                 .option("pathGlobFilter", "*.parquet").parquet(path))
     return (spark.readStream.schema(schema)

@@ -13,6 +13,7 @@ a frontier that is tiny relative to the corpus (distinct linked names only).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Optional
 
@@ -111,19 +112,52 @@ def kg_from_flat(flat: DataFrame, cfg: PipelineConfig,
     # `flat`: no second in-memory copy, columnar cache pruning serves each
     # consumer. The two checkpoints are independent → materialize them
     # CONCURRENTLY.
-    from concurrent.futures import ThreadPoolExecutor
     # Chunk-HAS = derived chunk→entity edges; an extractor MAY legitimately
     # emit an entity-entity relationship normalizing to "HAS" (e.g. "has"
     # upper-cased) — those are ordinary relationships in the reference and
     # must flow the relationship path, so routing keys on (pred, subj_type),
     # matching the skip condition in extract.extract_pages_flat.
     chunk_has = (F.col("pred") == "HAS") & (F.col("subj_type") == "Chunk")
+    entity_merged, rel_merged = checkpoint_pair(
+        merge.merge_nodes(nodes_raw.filter(F.col("type") != "Chunk")),
+        merge.merge_edges(edges_raw.filter(~chunk_has)))
+    res = kg_from_merged(entity_merged, rel_merged, chunk_nodes, has_edges,
+                         cfg, alias_dict)
+    from ..operators import embed
+    # chunk text for the embedding table comes from `flat` (kind='n' chunk
+    # rows carry it on a dedicated column) — NOT from the standalone
+    # chunker, which would pay a second full html→text+chunk Python
+    # crossing of the corpus; `chunks` (with char spans) stays the lazy
+    # standalone surface for consumers that need spans
+    chunk_texts = (flat.filter((F.col("kind") == "n")
+                               & F.col("chunk_text").isNotNull())
+                   .select("url", "chunk_id",
+                           F.col("chunk_text").alias("text")))
+    res.chunk_embeddings = embed.chunk_embeddings(chunk_texts)
+    return res
+
+
+def checkpoint_pair(nodes: DataFrame,
+                    edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Eagerly `localCheckpoint` two independent merged slices
+    CONCURRENTLY (one Spark job each, submitted from two threads)."""
     with ThreadPoolExecutor(2) as pool:
-        f_nodes = pool.submit(lambda: merge.merge_nodes(
-            nodes_raw.filter(F.col("type") != "Chunk")).localCheckpoint())
-        f_edges = pool.submit(lambda: merge.merge_edges(
-            edges_raw.filter(~chunk_has)).localCheckpoint())
-        entity_merged, rel_merged = f_nodes.result(), f_edges.result()
+        f_nodes = pool.submit(nodes.localCheckpoint)
+        f_edges = pool.submit(edges.localCheckpoint)
+        return f_nodes.result(), f_edges.result()
+
+
+def kg_from_merged(entity_merged: DataFrame, rel_merged: DataFrame,
+                   chunk_nodes: DataFrame, has_edges: DataFrame,
+                   cfg: PipelineConfig,
+                   alias_dict: Optional[DataFrame] = None) -> KGResult:
+    """Everything after the merge: union the merged entity/relationship
+    slices with the pass-through chunk nodes / HAS edges → link → CC →
+    canonical rewrite. The one post-merge definition shared by the batch
+    build (kg_from_flat) and the incremental finalize
+    (streaming.ingest.finalize_incremental); `entity_merged` and
+    `rel_merged` are expected checkpointed. The result has no `chunks`
+    and no `chunk_embeddings`."""
     nodes = entity_merged.unionByName(
         chunk_nodes.select(*entity_merged.columns))
     edges = rel_merged.unionByName(
@@ -132,7 +166,7 @@ def kg_from_flat(flat: DataFrame, cfg: PipelineConfig,
     # entity linking + canonicalization (north rule; beyond the reference's
     # exact-(label,id) MERGE — ref code/pdf_graphrag.py:277-300).
     # Uses the checkpointed entity slice directly (not the union) so the
-    # linking plan never rescans `flat`.
+    # linking plan never rescans the pass-through slices.
     sim = linking.similarity_edges(
         entity_merged, cfg.minhash_permutations, cfg.lsh_bands,
         cfg.shingle_size, cfg.jaccard_threshold, cfg.link_types,
@@ -149,19 +183,8 @@ def kg_from_flat(flat: DataFrame, cfg: PipelineConfig,
         entity_merged.select("id", "type"), sim, cfg.max_cc_iterations)
 
     canonical_nodes, canonical_edges = rewrite_canonical(nodes, edges, mapping)
-    from ..operators import embed
-    # chunk text for the embedding table comes from `flat` (kind='n' chunk
-    # rows carry it on a dedicated column) — NOT from the standalone
-    # chunker, which would pay a second full html→text+chunk Python
-    # crossing of the corpus; `chunks` (with char spans) stays the lazy
-    # standalone surface for consumers that need spans
-    chunk_texts = (flat.filter((F.col("kind") == "n")
-                               & F.col("chunk_text").isNotNull())
-                   .select("url", "chunk_id",
-                           F.col("chunk_text").alias("text")))
     return KGResult(None, nodes, edges, sim, mapping,
-                    canonical_nodes, canonical_edges,
-                    chunk_embeddings=embed.chunk_embeddings(chunk_texts))
+                    canonical_nodes, canonical_edges)
 
 
 def strict_filter(nodes_raw: DataFrame, edges_raw: DataFrame,

@@ -7,6 +7,11 @@ caller for local tests:
     extraction UDF's per-batch memory stays flat
   * shuffle partitions sized to the cluster (caller passes cores locally;
     a real cluster would use 2-3x total cores)
+  * `file:` paths through Hadoop's RawLocalFileSystem, without the `.crc`
+    sidecar per written file. Without the native libhadoop, every file and
+    directory Hadoop creates locally costs one `chmod` process forked from
+    the driver JVM, and the checksummed filesystem chmods each sidecar too.
+    The raw one forks about a quarter fewer of them.
 """
 
 from __future__ import annotations
@@ -45,6 +50,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.hadoop.fs.file.impl",
+                "org.apache.hadoop.fs.RawLocalFileSystem")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -174,38 +174,27 @@ def compact_incremental_state(spark: SparkSession, state_dir: str) -> None:
 
 def finalize_incremental(spark: SparkSession, state_dir: str, cfg=None):
     """Assemble the current graph from incremental state: fold kv deltas
-    (exact, see _write_merge_delta), reassemble property maps, union the
-    append-only chunk/HAS slices, then the SAME linking +
-    canonicalization stages as the batch plan. Returns
+    (exact, see _write_merge_delta) and reassemble property maps into two
+    concurrent checkpoints, then the SAME post-merge stages as the batch
+    plan (pipeline.kg_from_merged: union with the append-only chunk/HAS
+    slices → link → CC → rewrite). Returns
     (nodes, edges, canonical_nodes, canonical_edges, mapping)."""
-    from ..operators import components, linking, merge
-    from ..plans.pipeline import rewrite_canonical
+    from ..operators import merge
+    from ..plans.pipeline import checkpoint_pair, kg_from_merged
     if cfg is None:
         from ..config import PipelineConfig
         cfg = PipelineConfig()
 
-    ent = merge.assemble_merged(
-        merge.kv_fold(
-            spark.read.parquet(f"{state_dir}/nodes_kv").drop("batch"),
-            ["id", "type"]),
-        ["id", "type"]).select(*_NODE_COLS)
-    rel = merge.assemble_merged(
-        merge.kv_fold(
-            spark.read.parquet(f"{state_dir}/edges_kv").drop("batch"),
-            _EDGE_KEYS),
-        _EDGE_KEYS)
-    chunk_nodes = (spark.read.parquet(f"{state_dir}/chunk_nodes")
-                   .drop("batch"))
-    has_edges = spark.read.parquet(f"{state_dir}/has_edges").drop("batch")
+    def folded(sub, keys):
+        kv = spark.read.parquet(f"{state_dir}/{sub}").drop("batch")
+        return merge.assemble_merged(merge.kv_fold(kv, keys), keys)
 
-    nodes = ent.unionByName(chunk_nodes.select(*_NODE_COLS))
-    edges = rel.unionByName(has_edges.select(*rel.columns))
-
-    sim = linking.similarity_edges(
-        ent, cfg.minhash_permutations, cfg.lsh_bands,
-        cfg.shingle_size, cfg.jaccard_threshold, cfg.link_types)
-    mapping = components.canonical_mapping(
-        ent.select("id", "type"), sim, cfg.max_cc_iterations)
-    canonical_nodes, canonical_edges = rewrite_canonical(
-        nodes, edges, mapping)
-    return nodes, edges, canonical_nodes, canonical_edges, mapping
+    ent, rel = checkpoint_pair(
+        folded("nodes_kv", ["id", "type"]).select(*_NODE_COLS),
+        folded("edges_kv", _EDGE_KEYS))
+    res = kg_from_merged(
+        ent, rel,
+        spark.read.parquet(f"{state_dir}/chunk_nodes").drop("batch"),
+        spark.read.parquet(f"{state_dir}/has_edges").drop("batch"), cfg)
+    return (res.nodes, res.edges, res.canonical_nodes, res.canonical_edges,
+            res.mapping)

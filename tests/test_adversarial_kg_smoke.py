@@ -95,3 +95,25 @@ def test_emb_kg_query_survives_edge_corpus(spark, edge_kg_emb_dir, name):
     from llm_knowledge_graph_spark.plans.kg_queries import KG_QUERIES
     rows = KG_QUERIES[name](spark, edge_kg_emb_dir).collect()
     assert isinstance(rows, list)
+
+
+def test_stream_documents_accepts_file_uri_for_both_layouts(
+        spark, edge_kg_docs_dir, tmp_path):
+    """The documents layout probe goes through the Hadoop FileSystem, so a
+    `file://` URI streams every row in both parquet layouts: a directory
+    of part files and a single `documents.parquet` file. The query's own
+    stream/batch parity gate raises if the stream drains zero rows."""
+    import pyarrow.parquet as pq
+
+    from llm_knowledge_graph_spark.plans.kg_queries import KG_QUERIES
+
+    single = tmp_path / "single_file"
+    single.mkdir()
+    docs = spark.read.parquet(f"{edge_kg_docs_dir}/documents.parquet")
+    pq.write_table(docs.toArrow(), str(single / "documents.parquet"))
+    n_langs = docs.select("lang").distinct().count()
+    for sf_dir in (edge_kg_docs_dir, str(single)):
+        rows = KG_QUERIES["kg_streaming_lang_counts"](
+            spark, f"file://{sf_dir}").collect()
+        assert sum(r.n_docs for r in rows) == docs.count()
+        assert len(rows) == n_langs

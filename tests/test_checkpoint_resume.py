@@ -97,6 +97,22 @@ def test_materialize_roundtrip_and_bucket_pruning(spark, kg_result, tmp_path):
     assert pruned.count() >= 1
 
 
+def test_local_writes_have_no_checksum_sidecars(spark, tmp_path):
+    """get_spark routes `file:` paths through RawLocalFileSystem: a local
+    partitioned write leaves part files and no `.crc` sidecars (each
+    sidecar cost one more `chmod` forked from the driver JVM)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri())
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    assert fs.getClass().getName() == "org.apache.hadoop.fs.RawLocalFileSystem"
+    out = tmp_path / "t"
+    (spark.range(40).withColumn("b", F.col("id") % 4)
+     .write.partitionBy("b").parquet(str(out)))
+    names = [p.name for p in out.rglob("*") if p.is_file()]
+    assert sum(n.endswith(".parquet") for n in names) >= 4
+    assert [n for n in names if n.endswith(".crc")] == []
+    assert spark.read.parquet(str(out)).count() == 40
+
+
 def _metrics_totals(spark, out):
     """(nodes, edges) from the `total` rows of {out}/metrics."""
     rows = spark.read.parquet(f"{out}/metrics").filter(

@@ -149,6 +149,32 @@ def test_canonical_mapping_driver_vs_distributed(spark):
         ("Person", "f", "e"), ("Person", "g", "e")}
 
 
+def test_canonical_mapping_is_an_arrow_local_relation(spark):
+    """The driver-built mapping enters the plan as a local relation, not a
+    pickled Python RDD: reading it (every AQE stage of the rewrite's
+    broadcast) must start no Python worker — linked and empty alike. Its
+    rows are driver_union_find's, with the documented schema."""
+    from llm_knowledge_graph_spark.operators.components import (
+        canonical_mapping, driver_union_find)
+
+    nodes = spark.createDataFrame(
+        [(c, "Person") for c in "abcefgz"], "id string, type string")
+    sim = spark.createDataFrame(
+        [("a", "b", "Person", 1.0), ("b", "c", "Person", 1.0),
+         ("f", "e", "Person", 1.0), ("g", "e", "Person", 1.0)],
+        "a string, b string, type string, jaccard double")
+    for edges in (sim, sim.limit(0)):
+        mapping = canonical_mapping(nodes, edges)
+        lineage = mapping._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
+        assert mapping.schema.simpleString() == (
+            "struct<type:string,id:string,canonical_id:string>")
+        expect = sorted(("Person", k, v) for k, v in driver_union_find(
+            [(r.a, r.b) for r in edges.collect()]).items())
+        assert sorted(map(tuple, mapping.collect())) == expect
+    assert expect == []  # the second pass really was the empty case
+
+
 def test_minhash_lsh_recall_on_aliases(spark):
     """Every true alias pair must survive LSH blocking + scoring."""
     from llm_knowledge_graph_spark.corpus import alias_variants
