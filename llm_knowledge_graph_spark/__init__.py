@@ -14,7 +14,7 @@ Layout:
                     reference's deterministic stages; no Spark)
   corpus          — deterministic Common-Crawl-style pages fixture synthesizer
   functions/      — column-level expression helpers (normalize/text/vectors/hashing)
-  operators/      — DataFrame→DataFrame stages (chunk, extract, dedup, link,
+  operators/      — DataFrame→DataFrame stages (extract, merge, dedup, link,
                     components, materialize, checkpoint, similarity)
   plans/          — end-to-end pipeline composition + query surface
   streaming/      — incremental ingest (Structured Streaming file source)

@@ -41,9 +41,6 @@ class PipelineConfig:
     # materialization — subject-hash partitioning + salting (north rule)
     n_subject_buckets: int = 32
     hot_subject_salt: int = 8
-    # checkpoint/resume
-    checkpoint_dir: Optional[str] = None
-    run_id: str = "run0"
     # V4 confidence gate before sink commit (ref legal_graphrag.py:342,
     # :619-626): None = ungated (always commit); set to e.g. 0.99 to skip
     # the graph write when mean(V1..V3) falls below it

@@ -6,91 +6,26 @@ Spark-first design:
   * The reference fans out one LLM call per chunk via asyncio
     (code/pdf_graphrag.py:754-781); here Spark task parallelism IS the
     fan-out and the "model" is the deterministic extractor running inside an
-    Arrow-batched pandas UDF (north rule: batched pandas/Arrow UDFs, no
+    Arrow-batched mapInPandas stage (north rule: batched pandas/Arrow UDFs, no
     per-row Python at the Spark level). Swapping in a real ONNX-quantized
     extractor means replacing `extract_chunk` with a session held in a
     module-level cache (loaded once per executor) — the operator shape,
     schema and batching stay identical.
   * Endpoint resolution (ref :459-468, an O(V·E) list scan per chunk) is
-    chunk-local, so it stays inside the UDF as an O(V+E) dict lookup —
+    chunk-local, so it stays inside the stage as an O(V+E) dict lookup —
     data-parallel, zero shuffle. Cross-chunk merging is the next stage.
-  * One UDF evaluation emits BOTH node and edge arrays as a single struct;
-    callers persist the intermediate and explode twice, so extraction runs
-    once per chunk.
+  * html→text, chunking and extraction run FUSED in one mapInPandas stage
+    (extract_pages_flat) that emits nodes and edges as one flat long-format
+    frame; callers persist it and project nodes/edges out JVM-side
+    (nodes_from_flat/edges_from_flat), so extraction runs once per chunk
+    and the corpus crosses into Python once.
 """
 
 from __future__ import annotations
 
-from typing import Optional
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
-from ..reference_impl import build_graph_document, extract_chunk, strict_mode_filter
-
-GD_TYPE = (
-    "struct<"
-    "nodes:array<struct<id:string,type:string,properties:map<string,string>>>,"
-    "edges:array<struct<subj:string,subj_type:string,pred:string,"
-    "obj:string,obj_type:string,properties:map<string,string>>>"
-    ">"
-)
-
-
-def make_graphdoc_udf(with_embedding: bool = False,
-                      allowed_entities: Optional[list] = None,
-                      allowed_relationships: Optional[list] = None):
-    """Builds the per-chunk extraction UDF. Chunk-node ids are scoped by url
-    (`<url>#chunk_<i>`) because the reference's `chunk_{i}` (ref :406) is
-    only unique within one document."""
-
-    def _one(url: str, chunk_id: int, text: str) -> dict:
-        gd = build_graph_document(
-            extract_chunk(text or ""), chunk_id, text or "",
-            page=0, with_embedding=with_embedding,
-        )
-        if allowed_entities is not None or allowed_relationships is not None:
-            # None passes through as UNRESTRICTED for that dimension
-            gd = strict_mode_filter(gd, allowed_entities,
-                                    allowed_relationships)
-        prefix = f"{url}#chunk_{chunk_id}"
-        for n in gd["nodes"]:
-            if n["type"] == "Chunk":
-                n["id"] = prefix
-        for e in gd["edges"]:
-            if e["subj_type"] == "Chunk":
-                e["subj"] = prefix
-        return gd
-
-    @pandas_udf("string")
-    def graphdoc_udf(url: pd.Series, chunk_id: pd.Series,
-                     text: pd.Series) -> pd.Series:
-        # Returns JSON, not the nested Arrow struct: pyarrow's python→arrow
-        # conversion of struct<array<struct<map>>> falls off the vectorized
-        # path and is ~30x slower than string transfer + JVM-side from_json
-        # (measured: 14.8s vs 0.4s on 800 chunks at local[32]).
-        import json
-        return pd.Series([
-            json.dumps(_one(u, int(c), t), ensure_ascii=False)
-            for u, c, t in zip(url, chunk_id, text)
-        ])
-
-    return graphdoc_udf
-
-
-def with_graph_docs(chunks: DataFrame, with_embedding: bool = False,
-                    allowed_entities: Optional[list] = None,
-                    allowed_relationships: Optional[list] = None) -> DataFrame:
-    """chunks(url, chunk_id, text) → + `gd` struct column (persist me)."""
-    udf = make_graphdoc_udf(with_embedding, allowed_entities,
-                            allowed_relationships)
-    return chunks.withColumn(
-        "gd",
-        F.from_json(udf(F.col("url"), F.col("chunk_id"), F.col("text")),
-                    GD_TYPE),
-    )
 
 
 FLAT_SCHEMA = ("url string, chunk_id long, kind string, a string, "
@@ -173,7 +108,7 @@ def extract_pages_flat(pages: DataFrame, chunk_size: int = 1024,
                         # :484-492) are NOT emitted: they are a pure
                         # projection of the node rows (one HAS per non-Chunk
                         # node row) and are derived JVM-side by
-                        # has_edges_from_flat — they are the dominant edge
+                        # has_edges_from_nodes — they are the dominant edge
                         # class (~40% of all rows), so deriving them halves
                         # the Arrow transfer + cache footprint.
                         if e["pred"] == "HAS" and e["subj_type"] == "Chunk":
@@ -214,7 +149,7 @@ def nodes_from_flat(flat: DataFrame) -> DataFrame:
 
 
 def edges_from_flat(flat: DataFrame) -> DataFrame:
-    """Non-HAS edges only — HAS edges are derived (has_edges_from_flat)."""
+    """Non-HAS edges only — HAS edges are derived (has_edges_from_nodes)."""
     return (flat.filter(F.col("kind") == "e")
             .select(F.col("a").alias("subj"), F.col("a_type").alias("subj_type"),
                     "pred",
@@ -242,34 +177,3 @@ def has_edges_from_nodes(nodes: DataFrame) -> DataFrame:
                 F.col("type").alias("obj_type"),
                 empty.alias("properties"),
                 "url", "chunk_id"))
-
-
-def has_edges_from_flat(flat: DataFrame) -> DataFrame:
-    return has_edges_from_nodes(nodes_from_flat(flat))
-
-
-def nodes_from(gd_df: DataFrame) -> DataFrame:
-    """→ raw per-chunk nodes with lineage (url, chunk_id)."""
-    return gd_df.select(
-        "url", "chunk_id", F.explode(F.col("gd.nodes")).alias("n")
-    ).select(
-        F.col("n.id").alias("id"),
-        F.col("n.type").alias("type"),
-        F.col("n.properties").alias("properties"),
-        "url", "chunk_id",
-    )
-
-
-def edges_from(gd_df: DataFrame) -> DataFrame:
-    """→ raw per-chunk edges (triples) with lineage (url, chunk_id)."""
-    return gd_df.select(
-        "url", "chunk_id", F.explode(F.col("gd.edges")).alias("e")
-    ).select(
-        F.col("e.subj").alias("subj"),
-        F.col("e.subj_type").alias("subj_type"),
-        F.col("e.pred").alias("pred"),
-        F.col("e.obj").alias("obj"),
-        F.col("e.obj_type").alias("obj_type"),
-        F.col("e.properties").alias("properties"),
-        "url", "chunk_id",
-    )

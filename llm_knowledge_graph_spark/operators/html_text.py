@@ -1,45 +1,18 @@
-"""HTML→text extraction stage (S1 analogue).
+"""Language gate ahead of extraction (S1 analogue).
 
-Spark-first design notes:
-  * The `lang` filter is applied BEFORE this stage by the pipeline, so the
-    (expensive) parse never runs on dropped rows, and Catalyst pushes the
-    lang predicate into the parquet scan.
-  * Rows that already carry `text` skip the parse entirely: the UDF is only
-    evaluated under `text IS NULL` (when/otherwise), so at 100 TB the `html`
-    bytes of populated rows are read but not parsed; if the corpus is mostly
-    pre-extracted, project `html` away before this stage.
-  * Byte-identity per url (north rule) is guaranteed because the UDF calls
-    the same pure function as the plain-Python oracle
-    (reference_impl.html_to_text) — tested in tests/test_extraction_fidelity.py.
+The `lang` filter runs BEFORE the fused extract stage
+(extract.extract_pages_flat), so the html→text parse never runs on
+dropped rows, and Catalyst pushes the predicate into the parquet scan.
+html→text itself happens inside that stage, and only for rows whose
+`text` is null: it calls the same pure function as the plain-Python
+oracle (reference_impl.html_to_text), so extracted text is byte-identical
+per url (tests/test_extraction_fidelity.py).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
-from ..reference_impl import html_to_text
-
-
-def make_html_to_text_udf():
-    # created lazily — pandas_udf DDL parsing needs an active SparkSession
-    @pandas_udf("string")
-    def html_to_text_udf(html: pd.Series) -> pd.Series:
-        # Arrow-batched; pure function of bytes → byte-identical everywhere
-        return html.map(lambda b: html_to_text(b) if b is not None else "")
-    return html_to_text_udf
-
-
-def with_extracted_text(pages: DataFrame) -> DataFrame:
-    """Adds/renames `text` so every surviving row has extracted text."""
-    udf = make_html_to_text_udf()
-    return pages.withColumn(
-        "text",
-        F.when(F.col("text").isNotNull(), F.col("text"))
-         .otherwise(udf(F.col("html"))),
-    )
 
 
 def filter_langs(pages: DataFrame, langs) -> DataFrame:

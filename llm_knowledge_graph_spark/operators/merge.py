@@ -28,6 +28,11 @@ from typing import List
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# merged-node columns and the edge merge key, shared by the batch merge,
+# the incremental state (streaming/ingest.py) and the canonical rewrite
+NODE_COLS = ["id", "type", "properties", "url", "chunk_id"]
+EDGE_KEYS = ["subj", "subj_type", "pred", "obj", "obj_type"]
+
 
 def kv_level1(df: DataFrame, keys: List[str]) -> DataFrame:
     """Level-1 fold state: one row per (*keys, property k) carrying the
@@ -83,13 +88,11 @@ def _merge_by(df: DataFrame, keys: List[str]) -> DataFrame:
 
 def merge_nodes(nodes_raw: DataFrame) -> DataFrame:
     """raw nodes(id,type,properties,url,chunk_id) → one row per (type,id)."""
-    return _merge_by(nodes_raw, ["id", "type"]).select(
-        "id", "type", "properties", "url", "chunk_id")
+    return _merge_by(nodes_raw, ["id", "type"]).select(*NODE_COLS)
 
 
 def merge_edges(edges_raw: DataFrame) -> DataFrame:
     """raw edges → one row per (subj, subj_type, pred, obj, obj_type) with
     merged properties and first-witness lineage."""
-    gkeys = ["subj", "subj_type", "pred", "obj", "obj_type"]
-    return _merge_by(edges_raw, gkeys).select(
-        *gkeys, "properties", "url", "chunk_id")
+    return _merge_by(edges_raw, EDGE_KEYS).select(
+        *EDGE_KEYS, "properties", "url", "chunk_id")

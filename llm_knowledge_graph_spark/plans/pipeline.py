@@ -1,8 +1,8 @@
 """End-to-end KG construction pipeline (the Spark equivalent of
 PDFGraphRAG.process, ref code/pdf_graphrag.py:800-853 — see SURVEY §3.1).
 
-    pages ─filter(lang)─ html→text ─chunk─ extract(mapInPandas)
-          ─[per-chunk normalize + HAS]─ merge nodes/edges (N10)
+    pages ─filter(lang)─ mapInPandas(html→text ─chunk─ extract)
+          ─[strict filter + HAS split]─ merge nodes/edges (N10)
           ─minhash-LSH link─ connected components─ canonical rewrite
           ─materialize (subject-hash buckets + salt) + metrics
 
@@ -17,17 +17,16 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators import chunker, components, extract, html_text, linking, merge
+from ..operators import components, extract, html_text, linking, merge
 from ..operators import materialize
 
 
 @dataclass
 class KGResult:
-    chunks: Optional[DataFrame]  # standalone chunker surface; build_kg only
     nodes: DataFrame          # merged, pre-canonicalization
     edges: DataFrame
     sim_edges: DataFrame      # entity-linking similarity edges
@@ -72,15 +71,51 @@ def build_kg(spark: SparkSession, pages: DataFrame,
 
     # FUSED per-document path: html→text + chunk + extract + graphdoc in one
     # mapInPandas stage (one Python crossing for the whole corpus — see
-    # extract.extract_pages_flat). The standalone chunker/extract operators
-    # remain for per-stage use; strict-mode filtering applies via N9 exprs.
+    # extract.extract_pages_flat); strict-mode filtering applies JVM-side
+    # in split_extracted.
     flat = extract.extract_pages_flat(
         pages, cfg.chunk_size, cfg.chunk_overlap,
         with_embedding=cfg.with_chunk_embeddings).persist()
-    res = kg_from_flat(flat, cfg, alias_dict)
-    res.chunks = chunker.chunk_pages(html_text.with_extracted_text(pages),
-                                     cfg.chunk_size, cfg.chunk_overlap)
-    return res
+    return kg_from_flat(flat, cfg, alias_dict)
+
+
+def chunk_has() -> Column:
+    """Selects the derived chunk→entity HAS edges. An extractor MAY
+    legitimately emit an entity-entity relationship normalizing to "HAS"
+    (e.g. "has" upper-cased) — those are ordinary relationships in the
+    reference and must flow the relationship path, so routing keys on
+    (pred, subj_type), matching the skip condition in
+    extract.extract_pages_flat."""
+    return (F.col("pred") == "HAS") & (F.col("subj_type") == "Chunk")
+
+
+def split_extracted(
+        flat: DataFrame, cfg: PipelineConfig
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The pre-merge split of the fused extractor's flat rows: node/edge
+    rows → strict filter → (entity rows, relationship rows, chunk nodes,
+    chunk-HAS edges). The batch build merges the first two
+    (kg_from_flat); the incremental writer folds them into per-batch
+    level-1 state (streaming.ingest._write_merge_delta).
+
+    Only entity mentions and relationships can collide, so only they are
+    MERGE-dedup'd: chunk nodes are unique by construction (id =
+    url#chunk_i) and HAS edges are unique per (chunk, entity). Routing
+    those around the merge keeps the corpus text (chunk `text` property)
+    OUT of the merge shuffle. HAS edges are DERIVED from the (strict-
+    filtered) node rows JVM-side, never shipped from python."""
+    nodes_raw = extract.nodes_from_flat(flat)
+    edges_raw = extract.edges_from_flat(flat)
+    if (cfg.allowed_entities is not None
+            or cfg.allowed_relationships is not None):
+        nodes_raw, edges_raw = strict_filter(
+            nodes_raw, edges_raw,
+            cfg.allowed_entities, cfg.allowed_relationships)
+    return (nodes_raw.filter(F.col("type") != "Chunk"),
+            edges_raw.filter(~chunk_has()),
+            nodes_raw.filter(F.col("type") == "Chunk")
+                     .select(*merge.NODE_COLS),
+            extract.has_edges_from_nodes(nodes_raw))
 
 
 def kg_from_flat(flat: DataFrame, cfg: PipelineConfig,
@@ -89,22 +124,7 @@ def kg_from_flat(flat: DataFrame, cfg: PipelineConfig,
     canonical rewrite, over the fused extractor's flat rows. `flat` is
     either build_kg's persisted extraction or the resumable CLI's
     checkpointed one; both paths share this one definition."""
-    nodes_raw = extract.nodes_from_flat(flat)
-    edges_raw = extract.edges_from_flat(flat)
-    if cfg.allowed_entities is not None or cfg.allowed_relationships is not None:
-        nodes_raw, edges_raw = strict_filter(
-            nodes_raw, edges_raw,
-            cfg.allowed_entities, cfg.allowed_relationships)
-
-    # MERGE-dedup only what can actually collide: chunk nodes are unique by
-    # construction (id = url#chunk_i) and HAS edges are unique per
-    # (chunk, entity) — routing them around the merge keeps the corpus text
-    # (chunk `text` property) OUT of the merge shuffle entirely; only
-    # entity mentions shuffle. HAS edges are DERIVED from the (strict-
-    # filtered) node rows JVM-side, never shipped from python.
-    chunk_nodes = nodes_raw.filter(F.col("type") == "Chunk")
-    has_edges = extract.has_edges_from_nodes(nodes_raw)
-
+    entities, rels, chunk_nodes, has_edges = split_extracted(flat, cfg)
     # localCheckpoint (eager) ONLY the merged (shuffled) slices — they are
     # consumed by 3+ downstream stages and truncating the plan keeps
     # Catalyst analysis flat. The pass-through slices (chunk nodes, HAS
@@ -112,23 +132,14 @@ def kg_from_flat(flat: DataFrame, cfg: PipelineConfig,
     # `flat`: no second in-memory copy, columnar cache pruning serves each
     # consumer. The two checkpoints are independent → materialize them
     # CONCURRENTLY.
-    # Chunk-HAS = derived chunk→entity edges; an extractor MAY legitimately
-    # emit an entity-entity relationship normalizing to "HAS" (e.g. "has"
-    # upper-cased) — those are ordinary relationships in the reference and
-    # must flow the relationship path, so routing keys on (pred, subj_type),
-    # matching the skip condition in extract.extract_pages_flat.
-    chunk_has = (F.col("pred") == "HAS") & (F.col("subj_type") == "Chunk")
     entity_merged, rel_merged = checkpoint_pair(
-        merge.merge_nodes(nodes_raw.filter(F.col("type") != "Chunk")),
-        merge.merge_edges(edges_raw.filter(~chunk_has)))
+        merge.merge_nodes(entities), merge.merge_edges(rels))
     res = kg_from_merged(entity_merged, rel_merged, chunk_nodes, has_edges,
                          cfg, alias_dict)
     from ..operators import embed
     # chunk text for the embedding table comes from `flat` (kind='n' chunk
-    # rows carry it on a dedicated column) — NOT from the standalone
-    # chunker, which would pay a second full html→text+chunk Python
-    # crossing of the corpus; `chunks` (with char spans) stays the lazy
-    # standalone surface for consumers that need spans
+    # rows carry it on a dedicated column): no second html→text+chunk
+    # Python crossing of the corpus
     chunk_texts = (flat.filter((F.col("kind") == "n")
                                & F.col("chunk_text").isNotNull())
                    .select("url", "chunk_id",
@@ -156,8 +167,8 @@ def kg_from_merged(entity_merged: DataFrame, rel_merged: DataFrame,
     canonical rewrite. The one post-merge definition shared by the batch
     build (kg_from_flat) and the incremental finalize
     (streaming.ingest.finalize_incremental); `entity_merged` and
-    `rel_merged` are expected checkpointed. The result has no `chunks`
-    and no `chunk_embeddings`."""
+    `rel_merged` are expected checkpointed. The result has no
+    `chunk_embeddings`."""
     nodes = entity_merged.unionByName(
         chunk_nodes.select(*entity_merged.columns))
     edges = rel_merged.unionByName(
@@ -183,7 +194,7 @@ def kg_from_merged(entity_merged: DataFrame, rel_merged: DataFrame,
         entity_merged.select("id", "type"), sim, cfg.max_cc_iterations)
 
     canonical_nodes, canonical_edges = rewrite_canonical(nodes, edges, mapping)
-    return KGResult(None, nodes, edges, sim, mapping,
+    return KGResult(nodes, edges, sim, mapping,
                     canonical_nodes, canonical_edges)
 
 
@@ -260,10 +271,8 @@ def rewrite_canonical(nodes: DataFrame, edges: DataFrame,
     ent_stable = entities.filter(F.col("canonical_id").isNull())
     canon_nodes = (
         merge.merge_nodes(ent_rewritten)
-        .unionByName(ent_stable.select("id", "type", "properties",
-                                       "url", "chunk_id"))
-        .unionByName(chunk_nodes.select("id", "type", "properties",
-                                        "url", "chunk_id")))
+        .unionByName(ent_stable.select(*merge.NODE_COLS))
+        .unionByName(chunk_nodes.select(*merge.NODE_COLS)))
 
     fs = flagged.select(F.col("type").alias("subj_type"),
                         F.col("id").alias("subj"),
@@ -271,14 +280,11 @@ def rewrite_canonical(nodes: DataFrame, edges: DataFrame,
     fo = flagged.select(F.col("type").alias("obj_type"),
                         F.col("id").alias("obj"),
                         F.col("canonical_id").alias("obj_canon"))
-    cols = ["subj", "subj_type", "pred", "obj", "obj_type",
-            "properties", "url", "chunk_id"]
-    key = ["subj", "subj_type", "pred", "obj", "obj_type"]
+    cols = [*merge.EDGE_KEYS, "properties", "url", "chunk_id"]
 
     # chunk-HAS only — entity-entity HAS edges are ordinary relationships
-    # (see build_kg) and take the rels path, where both endpoints rewrite
-    chunk_has = (F.col("pred") == "HAS") & (F.col("subj_type") == "Chunk")
-    rels = (edges.filter(~chunk_has)
+    # (see chunk_has) and take the rels path, where both endpoints rewrite
+    rels = (edges.filter(~chunk_has())
             .join(F.broadcast(fs), ["subj_type", "subj"], "left")
             .join(F.broadcast(fo), ["obj_type", "obj"], "left"))
     touched_rel = (F.col("subj_canon").isNotNull()
@@ -295,11 +301,11 @@ def rewrite_canonical(nodes: DataFrame, edges: DataFrame,
     # HAS edge can only change through its OBJECT (subj is a chunk, never
     # linked). Rows at a touched object key (rewritten OR already at a
     # target) dedup together (tiny slice); the rest cannot collide.
-    has = (edges.filter(chunk_has)
+    has = (edges.filter(chunk_has())
            .join(F.broadcast(fo), ["obj_type", "obj"], "left"))
     has_touched = (has.filter(F.col("obj_canon").isNotNull())
                    .withColumn("obj", F.col("obj_canon"))
-                   .select(*cols).dropDuplicates(key))
+                   .select(*cols).dropDuplicates(merge.EDGE_KEYS))
     has_stable = has.filter(F.col("obj_canon").isNull()).select(*cols)
     canon_edges = (
         merge.merge_edges(rel_rewritten).select(*cols)

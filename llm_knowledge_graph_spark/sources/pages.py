@@ -4,8 +4,8 @@ Replaces the reference's PDF loaders (S1/S2, code/pdf_graphrag.py:785-788,
 code/legal-llm/legal_graphrag.py:381-404) with a columnar scan of the
 Iceberg-style pages table (input_hint shape). At 100 TB the table is an
 Iceberg/parquet dataset partitioned by crawl date; Catalyst pushes the lang
-filter and column pruning into the scan (we never read `html` for rows whose
-`text` is already populated — see operators/html_text.py).
+filter and column pruning into the scan; `html` crosses into Python only
+for rows whose `text` is null (operators/extract.py extract_pages_flat).
 """
 
 from __future__ import annotations

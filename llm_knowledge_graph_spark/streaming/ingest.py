@@ -1,18 +1,22 @@
-"""Incremental ingest via Structured Streaming (beyond the reference, which
-is strictly batch — SURVEY §2.8 'Streaming: none'; kept thin deliberately).
+"""Incremental KG construction via Structured Streaming (beyond the
+reference, which is strictly batch — SURVEY §2.8 'Streaming: none').
 
-A file-source stream over the pages directory runs the SAME chunk+extract
-stages incrementally: new parquet files appearing under `pages_path` flow
-through `foreachBatch`, which reuses the batch operators verbatim, writing
-per-batch edge output + watermarked per-pred counts. Checkpointing is
+A file-source stream over the pages directory drains one micro-batch per
+`maxFilesPerTrigger` files through `foreachBatch`. Each batch runs the
+batch plan's own extraction and pre-merge split
+(plans.pipeline.split_extracted) and appends its level-1 MERGE state as a
+per-batch delta (_write_merge_delta); finalize_incremental folds the
+deltas and runs the batch plan's post-merge stages, so the assembled
+graph equals the batch build over the same pages. Checkpointing is
 Spark's own streaming checkpoint (exactly-once per file)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators import chunker, extract, html_text
+from ..config import PipelineConfig
+from ..operators import extract, html_text, merge
+from ..plans.pipeline import checkpoint_pair, kg_from_merged, split_extracted
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -21,39 +25,6 @@ def stream_pages(spark: SparkSession, pages_path: str,
     return (spark.readStream.schema(PAGES_SCHEMA)
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(pages_path))
-
-
-def incremental_triples(stream_df: DataFrame, langs=("en",)) -> DataFrame:
-    """Streaming DF of extracted triples (same operators as batch)."""
-    pages = html_text.with_extracted_text(
-        html_text.filter_langs(stream_df, langs))
-    chunks = chunker.chunk_pages(pages)
-    gd = extract.with_graph_docs(chunks)
-    return extract.edges_from(gd)
-
-
-def run_incremental(spark: SparkSession, pages_path: str, out_dir: str,
-                    checkpoint_dir: str, langs=("en",)):
-    """Start the incremental KG-edge ingest; returns the StreamingQuery."""
-    triples = incremental_triples(stream_pages(spark, pages_path), langs)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(f"{out_dir}/edges"))
-
-    return (triples.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-# ---------------------------------------------------------------------------
-# Incremental MERGE-state construction (round 3)
-# ---------------------------------------------------------------------------
-
-_EDGE_KEYS = ["subj", "subj_type", "pred", "obj", "obj_type"]
-_NODE_COLS = ["id", "type", "properties", "url", "chunk_id"]
 
 
 def _write_merge_delta(pages: DataFrame, batch_id: int, state_dir: str,
@@ -79,31 +50,17 @@ def _write_merge_delta(pages: DataFrame, batch_id: int, state_dir: str,
     edges are append-only by construction (unique per url/chunk) and
     ride as plain appends.
     """
-    from ..operators import merge
-    from ..plans.pipeline import strict_filter
-
     pages = html_text.filter_langs(pages, cfg.supported_langs)
     flat = extract.extract_pages_flat(
         pages, cfg.chunk_size, cfg.chunk_overlap,
         with_embedding=cfg.with_chunk_embeddings).persist()
     try:
-        nodes_raw = extract.nodes_from_flat(flat)
-        edges_raw = extract.edges_from_flat(flat)
-        if (cfg.allowed_entities is not None
-                or cfg.allowed_relationships is not None):
-            nodes_raw, edges_raw = strict_filter(
-                nodes_raw, edges_raw,
-                cfg.allowed_entities, cfg.allowed_relationships)
-        chunk_has = ((F.col("pred") == "HAS")
-                     & (F.col("subj_type") == "Chunk"))
+        entities, rels, chunk_nodes, has_edges = split_extracted(flat, cfg)
         slices = {
-            "nodes_kv": merge.kv_level1(
-                nodes_raw.filter(F.col("type") != "Chunk"), ["id", "type"]),
-            "edges_kv": merge.kv_level1(
-                edges_raw.filter(~chunk_has), _EDGE_KEYS),
-            "chunk_nodes": nodes_raw.filter(F.col("type") == "Chunk")
-                                    .select(*_NODE_COLS),
-            "has_edges": extract.has_edges_from_nodes(nodes_raw),
+            "nodes_kv": merge.kv_level1(entities, ["id", "type"]),
+            "edges_kv": merge.kv_level1(rels, merge.EDGE_KEYS),
+            "chunk_nodes": chunk_nodes,
+            "has_edges": has_edges,
         }
         for sub, df in slices.items():
             (df.write.mode("overwrite")
@@ -132,7 +89,6 @@ def run_incremental_merge(spark: SparkSession, pages_path: str,
     batch-parity contract — detect offline and pass the explicit lists
     instead."""
     if cfg is None:
-        from ..config import PipelineConfig
         cfg = PipelineConfig()
     if cfg.auto_schema and cfg.allowed_entities is None \
             and cfg.allowed_relationships is None:
@@ -157,9 +113,8 @@ def compact_incremental_state(spark: SparkSession, state_dir: str) -> None:
     import shutil
     from pathlib import Path
 
-    from ..operators import merge
     for sub, keys in (("nodes_kv", ["id", "type"]),
-                      ("edges_kv", _EDGE_KEYS)):
+                      ("edges_kv", merge.EDGE_KEYS)):
         root = Path(state_dir) / sub
         batches = sorted(p.name for p in root.iterdir()
                          if p.name.startswith("batch="))
@@ -179,10 +134,7 @@ def finalize_incremental(spark: SparkSession, state_dir: str, cfg=None):
     plan (pipeline.kg_from_merged: union with the append-only chunk/HAS
     slices → link → CC → rewrite). Returns
     (nodes, edges, canonical_nodes, canonical_edges, mapping)."""
-    from ..operators import merge
-    from ..plans.pipeline import checkpoint_pair, kg_from_merged
     if cfg is None:
-        from ..config import PipelineConfig
         cfg = PipelineConfig()
 
     def folded(sub, keys):
@@ -190,8 +142,8 @@ def finalize_incremental(spark: SparkSession, state_dir: str, cfg=None):
         return merge.assemble_merged(merge.kv_fold(kv, keys), keys)
 
     ent, rel = checkpoint_pair(
-        folded("nodes_kv", ["id", "type"]).select(*_NODE_COLS),
-        folded("edges_kv", _EDGE_KEYS))
+        folded("nodes_kv", ["id", "type"]).select(*merge.NODE_COLS),
+        folded("edges_kv", merge.EDGE_KEYS))
     res = kg_from_merged(
         ent, rel,
         spark.read.parquet(f"{state_dir}/chunk_nodes").drop("batch"),

@@ -13,9 +13,17 @@ from pyspark.sql import functions as F
 pytestmark = pytest.mark.heavy  # round-5 core/heavy split
 
 
-def _chunk_stage(df):
-    from llm_knowledge_graph_spark.operators import chunker, html_text
-    return chunker.chunk_pages(html_text.with_extracted_text(df))
+def _extract_stage(df):
+    """The stage the resumable CLI checkpoints (tools/run_pipeline.py)."""
+    from llm_knowledge_graph_spark.operators import extract
+    return extract.extract_pages_flat(df)
+
+
+def _rows(df):
+    """Every column, row-order-insensitive (repr-keyed: the flat rows
+    carry nulls in different columns)."""
+    return sorted(map(tuple, df.select(*sorted(df.columns)).collect()),
+                  key=repr)
 
 
 def test_resume_equals_uninterrupted(spark, pages_df, tmp_path):
@@ -26,28 +34,28 @@ def test_resume_equals_uninterrupted(spark, pages_df, tmp_path):
     n_buckets = 4
 
     # uninterrupted result
-    full = sorted(map(tuple, _chunk_stage(pages_df)
-                      .select("url", "chunk_id", "text").collect()))
+    full = _rows(_extract_stage(pages_df))
 
     # interrupted run: process only buckets {0, 1} then "crash"
     binp = with_bucket(pages_df, "url", n_buckets)
     part = binp.filter(F.col("bucket").isin([0, 1])).drop("bucket")
-    out = _chunk_stage(part)
+    out = _extract_stage(part)
     from llm_knowledge_graph_spark.operators.checkpoint import (
         _mark_completed, with_bucket as wb)
     (wb(out, "url", n_buckets).write.mode("append")
-     .partitionBy("bucket").parquet(os.path.join(base, "run1", "chunk", "data")))
-    _mark_completed(base, "run1", "chunk", [0, 1],
+     .partitionBy("bucket")
+     .parquet(os.path.join(base, "run1", "extract", "data")))
+    _mark_completed(base, "run1", "extract", [0, 1],
                     extra={"n_buckets": n_buckets, "key_col": "url"})
-    assert completed_buckets(base, "run1", "chunk") == [0, 1]
+    assert completed_buckets(base, "run1", "extract") == [0, 1]
 
     # resume: must recompute only buckets {2, 3}
     resumed = run_stage_resumable(
-        spark, pages_df, _chunk_stage, base, "run1", "chunk",
+        spark, pages_df, _extract_stage, base, "run1", "extract",
         key_col="url", n_buckets=n_buckets)
-    got = sorted(map(tuple, resumed.select("url", "chunk_id", "text").collect()))
+    got = _rows(resumed)
     assert got == full
-    assert completed_buckets(base, "run1", "chunk") == [0, 1, 2, 3]
+    assert completed_buckets(base, "run1", "extract") == [0, 1, 2, 3]
 
 
 def test_fresh_run_writes_all_buckets(spark, pages_df, tmp_path):
@@ -56,23 +64,20 @@ def test_fresh_run_writes_all_buckets(spark, pages_df, tmp_path):
 
     base = str(tmp_path / "ckpt2")
     out = run_stage_resumable(
-        spark, pages_df, _chunk_stage, base, "runA", "chunk",
+        spark, pages_df, _extract_stage, base, "runA", "extract",
         key_col="url", n_buckets=3)
-    assert completed_buckets(base, "runA", "chunk") == [0, 1, 2]
+    assert completed_buckets(base, "runA", "extract") == [0, 1, 2]
     # full ROW comparison (review finding, round 3: a count-only check
     # passes even if the write/read roundtrip corrupts values)
-    want = sorted(map(tuple, _chunk_stage(pages_df)
-                      .select("url", "chunk_id", "text").collect()))
-    got = sorted(map(tuple,
-                     out.select("url", "chunk_id", "text").collect()))
+    want = _rows(_extract_stage(pages_df))
+    got = _rows(out)
     assert got == want
 
     # second invocation is a no-op read of the checkpoint (nothing pending)
     again = run_stage_resumable(
-        spark, pages_df, _chunk_stage, base, "runA", "chunk",
+        spark, pages_df, _extract_stage, base, "runA", "extract",
         key_col="url", n_buckets=3)
-    assert sorted(map(tuple, again.select("url", "chunk_id", "text")
-                      .collect())) == want
+    assert _rows(again) == want
 
 
 def test_materialize_roundtrip_and_bucket_pruning(spark, kg_result, tmp_path):
@@ -210,29 +215,29 @@ def test_torn_write_does_not_duplicate(spark, pages_df, tmp_path):
 
     base = str(tmp_path / "ckpt")
     n_buckets = 4
-    full = sorted(map(tuple, _chunk_stage(pages_df)
-                      .select("url", "chunk_id", "text").collect()))
+    full = _rows(_extract_stage(pages_df))
 
     # commit buckets {0,1} properly...
     binp = with_bucket(pages_df, "url", n_buckets)
     part = binp.filter(F.col("bucket").isin([0, 1])).drop("bucket")
-    (with_bucket(_chunk_stage(part), "url", n_buckets)
+    (with_bucket(_extract_stage(part), "url", n_buckets)
      .write.mode("append")
-     .partitionBy("bucket").parquet(os.path.join(base, "r", "chunk", "data")))
-    _mark_completed(base, "r", "chunk", [0, 1],
+     .partitionBy("bucket")
+     .parquet(os.path.join(base, "r", "extract", "data")))
+    _mark_completed(base, "r", "extract", [0, 1],
                     extra={"n_buckets": n_buckets, "key_col": "url"})
     # ...then TEAR bucket 2: data on disk, manifest never updated
     part2 = binp.filter(F.col("bucket") == 2).drop("bucket")
-    (with_bucket(_chunk_stage(part2), "url", n_buckets)
+    (with_bucket(_extract_stage(part2), "url", n_buckets)
      .write.mode("append")
-     .partitionBy("bucket").parquet(os.path.join(base, "r", "chunk", "data")))
-    assert completed_buckets(base, "r", "chunk") == [0, 1]
+     .partitionBy("bucket")
+     .parquet(os.path.join(base, "r", "extract", "data")))
+    assert completed_buckets(base, "r", "extract") == [0, 1]
 
     resumed = run_stage_resumable(
-        spark, pages_df, _chunk_stage, base, "r", "chunk",
+        spark, pages_df, _extract_stage, base, "r", "extract",
         key_col="url", n_buckets=n_buckets)
-    got = sorted(map(tuple,
-                     resumed.select("url", "chunk_id", "text").collect()))
+    got = _rows(resumed)
     assert got == full  # no duplicated bucket-2 rows
 
 
@@ -281,18 +286,18 @@ def test_resume_with_changed_params_fails_fast(spark, pages_df, tmp_path):
     from llm_knowledge_graph_spark.operators.checkpoint import (
         run_stage_resumable)
     base = str(tmp_path / "ckpt_params")
-    run_stage_resumable(spark, pages_df, _chunk_stage, base, "runP", "chunk",
-                        key_col="url", n_buckets=3)
+    run_stage_resumable(spark, pages_df, _extract_stage, base, "runP",
+                        "extract", key_col="url", n_buckets=3)
     with _pytest.raises(ValueError, match="n_buckets=3"):
-        run_stage_resumable(spark, pages_df, _chunk_stage, base, "runP",
-                            "chunk", key_col="url", n_buckets=5)
+        run_stage_resumable(spark, pages_df, _extract_stage, base, "runP",
+                            "extract", key_col="url", n_buckets=5)
     with _pytest.raises(ValueError, match="key_col"):
-        run_stage_resumable(spark, pages_df, _chunk_stage, base, "runP",
-                            "chunk", key_col="lang", n_buckets=3)
+        run_stage_resumable(spark, pages_df, _extract_stage, base, "runP",
+                            "extract", key_col="lang", n_buckets=3)
     # matching params still resume cleanly (no-op read)
-    out = run_stage_resumable(spark, pages_df, _chunk_stage, base, "runP",
-                              "chunk", key_col="url", n_buckets=3)
-    assert out.count() == _chunk_stage(pages_df).count()
+    out = run_stage_resumable(spark, pages_df, _extract_stage, base, "runP",
+                              "extract", key_col="url", n_buckets=3)
+    assert out.count() == _extract_stage(pages_df).count()
 
 
 def test_resume_with_changed_stage_schema_fails_fast(spark, pages_df,
@@ -311,10 +316,10 @@ def test_resume_with_changed_stage_schema_fails_fast(spark, pages_df,
         _manifest_path, run_stage_resumable)
 
     base = str(tmp_path / "ckpt_schema")
-    run_stage_resumable(spark, pages_df, _chunk_stage, base, "runS",
-                        "chunk", key_col="url", n_buckets=3)
+    run_stage_resumable(spark, pages_df, _extract_stage, base, "runS",
+                        "extract", key_col="url", n_buckets=3)
     # reopen one bucket as pending, as a crash mid-run would leave it
-    mp = _manifest_path(base, "runS", "chunk")
+    mp = _manifest_path(base, "runS", "extract")
     with open(mp) as f:
         manifest = json.load(f)
     manifest["completed"] = [0, 1]
@@ -322,12 +327,12 @@ def test_resume_with_changed_stage_schema_fails_fast(spark, pages_df,
         json.dump(manifest, f)
 
     def drifted_stage(df):
-        return _chunk_stage(df).withColumn("occ2", F.lit(1))
+        return _extract_stage(df).withColumn("occ2", F.lit(1))
 
     with _pytest.raises(ValueError, match="schema changed"):
         run_stage_resumable(spark, pages_df, drifted_stage, base, "runS",
-                            "chunk", key_col="url", n_buckets=3)
+                            "extract", key_col="url", n_buckets=3)
     # the unchanged stage still resumes and completes
-    out = run_stage_resumable(spark, pages_df, _chunk_stage, base, "runS",
-                              "chunk", key_col="url", n_buckets=3)
-    assert out.count() == _chunk_stage(pages_df).count()
+    out = run_stage_resumable(spark, pages_df, _extract_stage, base, "runS",
+                              "extract", key_col="url", n_buckets=3)
+    assert out.count() == _extract_stage(pages_df).count()

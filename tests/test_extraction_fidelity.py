@@ -1,6 +1,7 @@
 """North-star theme 1: extraction fidelity.
 
-* byte-identical extracted text per url (Spark UDF vs reference function)
+* byte-identical extracted text per url (fused extract stage vs reference
+  function)
 * triple P/R vs the plain-Python oracle pipeline — must be 1.0 internally
   (the >= 0.95 target of BASELINE.json has headroom for canonicalization
   ties; we hold exact equality).
@@ -21,20 +22,29 @@ def _pr(predicted: set, golden: set):
 
 
 def test_html_to_text_byte_identity(spark, pages_df, fixture_pages):
-    from llm_knowledge_graph_spark.operators.html_text import make_html_to_text_udf
-    from llm_knowledge_graph_spark.reference_impl import html_to_text
+    """The fused extract stage, forced onto its html branch (text nulled),
+    emits per (url, chunk_id) exactly the oracle's chunk of
+    html_to_text(html)."""
+    from llm_knowledge_graph_spark.operators.extract import extract_pages_flat
+    from llm_knowledge_graph_spark.reference_impl import (chunk_text,
+                                                          html_to_text)
 
-    udf = make_html_to_text_udf()
-    got = {
-        r.url: r.t
-        for r in pages_df.select("url", udf(F.col("html")).alias("t")).collect()
-    }
+    flat = extract_pages_flat(pages_df.withColumn("text", F.lit(None)
+                                                  .cast("string")))
+    got = {(r.url, r.chunk_id): r.chunk_text for r in
+           flat.filter((F.col("kind") == "n") & (F.col("a_type") == "Chunk"))
+           .select("url", "chunk_id", "chunk_text").collect()}
+    want = {}
     for p in fixture_pages:
         expected = html_to_text(p["html"])
-        assert got[p["url"]] == expected, f"text drift for {p['url']}"
+        for cid, ctext, _cs, _ce in chunk_text(expected):
+            want[(p["url"], cid)] = ctext
         # and the declared ground-truth column agrees where present
         if p["text"] is not None:
             assert expected == p["text"]
+    assert got.keys() == want.keys()
+    for key, ctext in want.items():
+        assert got[key] == ctext, f"text drift for {key}"
 
 
 def test_text_sha256_stability(fixture_pages):

@@ -29,12 +29,6 @@ def test_per_pred_edge_counts(kg_result, oracle_graph):
     assert got == dict(golden)
 
 
-def test_chunk_node_count_equals_chunk_count(kg_result):
-    n_chunks = kg_result.chunks.count()
-    n_chunk_nodes = kg_result.nodes.filter(F.col("type") == "Chunk").count()
-    assert n_chunk_nodes == n_chunks
-
-
 @pytest.mark.heavy
 def test_canonical_edges_no_dangling_entities(kg_result):
     """Every canonical edge endpoint exists in canonical nodes."""

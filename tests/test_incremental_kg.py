@@ -61,21 +61,28 @@ def test_incremental_merge_equals_batch_build(spark, tmp_path):
     assert len(batches) >= 3
 
 
-def test_incremental_honors_config_envelope(spark, tmp_path):
+@pytest.mark.parametrize("cfg_kw", [
+    pytest.param({"with_chunk_embeddings": True}, id="embeddings"),
+    pytest.param({"allowed_entities": ["Person", "Organization"],
+                  "allowed_relationships": ["WORKS_FOR", "FOUNDED",
+                                            "LOCATED_IN"]}, id="strict"),
+])
+def test_incremental_honors_config_envelope(spark, tmp_path, cfg_kw):
     """Review finding (round 3): _write_merge_delta hardcoded
     with_embedding=False and silently ignored auto_schema, so non-default
-    configs broke the documented batch-parity contract. Embeddings are
-    now plumbed per batch; auto_schema (a corpus-WIDE pass) fails fast."""
-    import pytest
+    configs broke the documented batch-parity contract. Embeddings and
+    the explicit strict-mode lists are honored per batch; auto_schema (a
+    corpus-WIDE pass) fails fast."""
     from llm_knowledge_graph_spark.config import PipelineConfig
     from llm_knowledge_graph_spark.plans.pipeline import build_kg
+    from llm_knowledge_graph_spark.reference_impl import reference_pipeline
     from llm_knowledge_graph_spark.sources.pages import PAGES_SCHEMA
     from llm_knowledge_graph_spark.corpus import make_pages
     from llm_knowledge_graph_spark.streaming.ingest import (
         _write_merge_delta, finalize_incremental, run_incremental_merge)
 
     pages = make_pages(24, seed=13)
-    cfg = PipelineConfig(with_chunk_embeddings=True)
+    cfg = PipelineConfig(**cfg_kw)
     state = str(tmp_path / "state")
     for bid, sl in ((0, pages[:12]), (1, pages[12:])):
         _write_merge_delta(spark.createDataFrame(sl, PAGES_SCHEMA),
@@ -85,12 +92,23 @@ def test_incremental_honors_config_envelope(spark, tmp_path):
     batch = build_kg(spark, spark.createDataFrame(pages, PAGES_SCHEMA),
                      cfg)
     assert _canon_rows(nodes) == _canon_rows(batch.nodes)
+    assert _canon_rows(edges) == _canon_rows(batch.edges)
     assert _canon_rows(canon_edges) == _canon_rows(batch.canonical_edges)
-    # the parity above is vacuous unless embeddings actually flowed
-    emb = (nodes.filter(F.col("type") == "Chunk")
-           .filter(F.col("properties").getItem("embedding").isNotNull())
-           .count())
-    assert emb > 0
+    # the parity above is vacuous unless the config actually took effect
+    if cfg.with_chunk_embeddings:
+        emb = (nodes.filter(F.col("type") == "Chunk")
+               .filter(F.col("properties").getItem("embedding").isNotNull())
+               .count())
+        assert emb > 0
+    else:
+        kept = {r.type for r in nodes.select("type").distinct().collect()}
+        assert kept == {"Chunk", *cfg.allowed_entities}
+        preds = {r.pred for r in edges.select("pred").distinct().collect()}
+        assert "HAS" in preds
+        assert preds <= {"HAS", *cfg.allowed_relationships}
+        unrestricted = reference_pipeline(pages)
+        assert {n["type"] for n in unrestricted["nodes"]} - kept
+        assert {e["pred"] for e in unrestricted["edges"]} - preds
 
     with pytest.raises(ValueError, match="auto_schema"):
         run_incremental_merge(spark, str(tmp_path / "nope"), state,

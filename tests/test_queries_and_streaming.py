@@ -86,33 +86,6 @@ def test_find_by_name_contains(kg_result):
     assert all("doe" in r.id.lower() for r in rows)
 
 
-@pytest.mark.heavy
-def test_streaming_incremental_matches_batch(spark, tmp_path):
-    """File-source streaming ingest produces the same triples as batch."""
-    from llm_knowledge_graph_spark.operators import chunker, extract, html_text
-    from llm_knowledge_graph_spark.sources.pages import synthesize_pages, write_pages
-    from llm_knowledge_graph_spark.streaming.ingest import run_incremental
-
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    pages = synthesize_pages(spark, 40, seed=7)
-    write_pages(pages, pages_dir)
-
-    q = run_incremental(spark, pages_dir, out_dir, ckpt)
-    if not q.awaitTermination(120):  # stop + raise, not a confusing
-        q.stop()                     # partial-output set-diff failure
-        raise TimeoutError("incremental ingest stream did not drain")
-
-    got = spark.read.parquet(f"{out_dir}/edges")
-    batch = extract.edges_from(extract.with_graph_docs(
-        chunker.chunk_pages(html_text.with_extracted_text(
-            html_text.filter_langs(spark.read.parquet(pages_dir), ("en",))))))
-    a = sorted((r.subj, r.pred, r.obj) for r in got.collect())
-    b = sorted((r.subj, r.pred, r.obj) for r in batch.collect())
-    assert a == b
-
-
 def test_streaming_lang_counts_matches_batch(spark):
     """The driver's streaming query drains the file stream to the same
     per-lang counts as a batch groupBy over the identical parquet."""

@@ -20,7 +20,7 @@ REF_PATH = "/root/reference/graph_docs_debug.json"
 
 pytestmark = pytest.mark.skipif(
     not os.path.exists(REF_PATH),
-    reason="reference artifact not present in this environment")
+    reason=f"reference artifact {REF_PATH} not present")
 
 
 @pytest.fixture(scope="module")

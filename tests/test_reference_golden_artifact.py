@@ -18,7 +18,7 @@ REF_PATH = "/root/reference/GRAPH_DOCS.json"
 
 pytestmark = pytest.mark.skipif(
     not os.path.exists(REF_PATH),
-    reason="reference artifact not present in this environment")
+    reason=f"reference artifact {REF_PATH} not present")
 
 
 @pytest.fixture(scope="module")

@@ -58,7 +58,6 @@ def main() -> None:
     cfg = PipelineConfig(
         supported_langs=tuple(args.langs.split(",")),
         n_subject_buckets=args.buckets, hot_subject_salt=args.salt,
-        checkpoint_dir=args.checkpoint_dir, run_id=args.run_id,
         auto_schema=args.auto_schema,
         confidence_threshold=args.confidence_threshold,
     )
